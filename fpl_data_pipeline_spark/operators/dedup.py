@@ -340,8 +340,10 @@ def _pair_pack_ok(ids: DataFrame | None, id_col: str = "doc_id") -> bool:
     None (caller has no cheap id relation) or an empty/out-of-range corpus
     keeps the exact two-column aggregation. The check is data-driven, not
     a local[32] constant: a 100 TB corpus with 64-bit ids falls back
-    automatically and computes the identical result."""
-    if ids is None:
+    automatically and computes the identical result. Only a ``bigint``
+    id column packs: ``shiftleft(a, 31)`` keeps the operand's type, so on
+    an ``int`` column it wraps and distinct pairs would merge silently."""
+    if ids is None or dict(ids.dtypes).get(id_col) != "bigint":
         return False
     r = ids.agg(F.min(id_col).alias("mn"), F.max(id_col).alias("mx")).first()
     return r["mx"] is not None and r["mn"] >= 0 and r["mx"] < (1 << 31)

@@ -23,13 +23,16 @@ Engine mapping, in the same order:
                      week_info after the fact so the next run's high-water
                      mark only advances once the week's fact rows landed
 
-Every table publish is atomic (stage + rename, crash-recoverable) and every
+Every table publish goes through ``sources/io.py`` (``publish``, or
+``write_stage`` + ``promote`` where the fact's quality gate sits between
+them; ``read_or_none`` recovers a torn publish before any read) and every
 load is an idempotent keyed merge, so run_pipeline(run_pipeline(X)) == X —
 the reference gets the same property from per-row ON CONFLICT loops.
 
 At 100 TB: each stage is one distributed job; the fact merge shuffles on its
-key once; dims broadcast. Swap the parquet directory for a table format and
-``_publish`` for its transactional commit and nothing else changes.
+key once; dims broadcast. ``io.publish`` is the single commit point: swap the
+parquet directory for a table format and ``io.publish``/``io.promote`` for
+its transactional commit, and nothing else changes.
 """
 
 from __future__ import annotations
@@ -43,62 +46,22 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from fpl_data_pipeline_spark.operators.upsert import upsert
 from fpl_data_pipeline_spark.sources import ingest
 from fpl_data_pipeline_spark.sources.incremental_load import incremental_load
+from fpl_data_pipeline_spark.sources.io import (
+    promote,
+    publish,
+    read_or_none,
+    write_stage,
+)
 
 TABLES = ("team_dm", "player_dm", "player_week_ft", "player_stats_dm", "week_info_dm")
-
-
-def recover(path: str) -> None:
-    """Crash-recovery preamble, REQUIRED before any read of ``path``:
-    if a previous publish crashed between its two renames (table renamed to
-    .bak, stage never promoted), the table path is missing and .bak holds
-    the only copy — restore it FIRST, then clean leftovers. Reading the
-    table before this restore would treat it as absent and silently rebuild
-    from the current batch alone, dropping all previously merged history."""
-    stage, backup = path + ".stage", path + ".bak"
-    if not os.path.exists(path) and os.path.exists(backup):
-        os.rename(backup, path)
-    for leftover in (stage, backup):
-        if os.path.exists(leftover):
-            shutil.rmtree(leftover)
-
-
-def _write_stage(df: DataFrame, path: str) -> str:
-    """Materialize fully into the staging dir (runs the Spark job); the
-    table itself is untouched until :func:`_promote`."""
-    recover(path)
-    stage = path + ".stage"
-    df.write.mode("overwrite").parquet(stage)
-    return stage
-
-
-def _promote(path: str) -> None:
-    """Atomic swap: table -> .bak, stage -> table, drop .bak."""
-    stage, backup = path + ".stage", path + ".bak"
-    if os.path.exists(path):
-        os.rename(path, backup)
-    os.rename(stage, path)
-    if os.path.exists(backup):
-        shutil.rmtree(backup)
-
-
-def _publish(df: DataFrame, path: str) -> None:
-    """Materialize fully into a staging dir, publish by atomic rename
-    (the streaming merge's crash-recovery contract, reused batch-side)."""
-    _write_stage(df, path)
-    _promote(path)
-
-
-def _read_or_none(spark: SparkSession, path: str) -> DataFrame | None:
-    recover(path)
-    return spark.read.parquet(path) if os.path.exists(path) else None
 
 
 def _merge_publish(
     spark: SparkSession, batch: DataFrame, path: str, keys: list[str]
 ) -> DataFrame:
-    base = _read_or_none(spark, path)  # _read_or_none runs recovery first
+    base = read_or_none(spark, path)
     merged = upsert(base, batch, keys) if base is not None else batch
-    _publish(merged, path)
+    publish(merged, path)
     return spark.read.parquet(path)
 
 
@@ -133,8 +96,8 @@ def run_pipeline(
         spark, os.path.join(landing_dir, "summaries", "*.json")
     )
     fact_source = ingest.build_player_week_ft(summaries)
-    base_fact = _read_or_none(spark, p("player_week_ft"))
-    prev_week_info = _read_or_none(spark, p("week_info_dm"))
+    base_fact = read_or_none(spark, p("player_week_ft"))
+    prev_week_info = read_or_none(spark, p("week_info_dm"))
     if prev_week_info is None:
         prev_week_info = ingest.build_week_info_dm(bootstrap).limit(0)  # hwm = 0
     if base_fact is None:
@@ -155,12 +118,12 @@ def run_pipeline(
     # ride it for free), the quality check reads them, and only a passing
     # check swaps the table — a failing gate aborts with the previous table
     # intact instead of leaving a corrupt table live with its backup deleted
-    stage = _write_stage(merged_fact, p("player_week_ft"))
+    stage = write_stage(merged_fact, p("player_week_ft"))
     metrics = obs.get
     if metrics["null_keys"] not in (0, None):
         shutil.rmtree(stage)
         raise ValueError(f"fact publish wrote {metrics['null_keys']} NULL-keyed rows")
-    _promote(p("player_week_ft"))
+    promote(p("player_week_ft"))
     player_week_ft = spark.read.parquet(p("player_week_ft"))
 
     # 7. player_stats_dm (understat scrape CSVs; optional in a landing zone)
@@ -171,7 +134,7 @@ def run_pipeline(
             spark, stats, p("player_stats_dm"), ["id", "match_id"]
         )
     else:
-        player_stats_dm = _read_or_none(spark, p("player_stats_dm"))
+        player_stats_dm = read_or_none(spark, p("player_stats_dm"))
 
     # 8. week_info_dm LAST: advances the high-water mark for the next run
     week_info_dm = _merge_publish(

@@ -10,11 +10,16 @@ helpers encode the 100 TB conventions:
   the weeks in the batch);
 - write_bucketed: pre-shuffled bucket layout on the join key so repeated
   fact<->fact joins and MERGEs skip the exchange entirely;
-- register_tables: CREATE TABLE IF NOT EXISTS over existing parquet dirs.
+- register_table: CREATE TABLE IF NOT EXISTS over existing parquet dirs;
+- publish / write_stage + promote / recover / read_or_none: the staged,
+  rename-swapped table commit every batch and streaming writer goes
+  through (the .stage/.bak crash protocol lives only here).
 """
 
 from __future__ import annotations
 
+import math
+import os
 import shutil
 from collections.abc import Sequence
 
@@ -70,6 +75,59 @@ def register_table(
     )
 
 
+def recover(path: str) -> None:
+    """Crash-recovery preamble, REQUIRED before any read of ``path``:
+    if a previous publish crashed between its two renames (table renamed to
+    .bak, stage never promoted), the table path is missing and .bak holds
+    the only copy — restore it FIRST, then clean leftovers. Reading the
+    table before this restore would treat it as absent and silently rebuild
+    from the current batch alone, dropping all previously merged history."""
+    stage, backup = path + ".stage", path + ".bak"
+    if not os.path.exists(path) and os.path.exists(backup):
+        os.rename(backup, path)
+    for leftover in (stage, backup):
+        if os.path.exists(leftover):
+            shutil.rmtree(leftover)
+
+
+def write_stage(df: DataFrame, path: str) -> str:
+    """Materialize fully into the staging dir (runs the Spark job) and
+    return it; the table itself is untouched until :func:`promote`, so a
+    caller can gate on the job's results and drop the stage instead."""
+    recover(path)
+    stage = path + ".stage"
+    df.write.mode("overwrite").parquet(stage)
+    return stage
+
+
+def promote(path: str) -> None:
+    """Atomic swap: table -> .bak, stage -> table, drop .bak."""
+    stage, backup = path + ".stage", path + ".bak"
+    if os.path.exists(path):
+        os.rename(path, backup)
+    os.rename(stage, path)
+    if os.path.exists(backup):
+        shutil.rmtree(backup)
+
+
+def publish(df: DataFrame, path: str) -> None:
+    """The engine's single commit point for a table: stage fully, then
+    promote by directory rename (atomic on a POSIX filesystem). A crash at
+    any point leaves the old table or the new one, never a half-written
+    directory, and :func:`recover` restores the torn-swap window. For a
+    table format or an object store, replace this with its transactional
+    commit (a manifest-pointer swap)."""
+    write_stage(df, path)
+    promote(path)
+
+
+def read_or_none(spark: SparkSession, path: str) -> DataFrame | None:
+    """The published table at ``path`` after crash recovery, or None when
+    it has never been published."""
+    recover(path)
+    return spark.read.parquet(path) if os.path.exists(path) else None
+
+
 def compact(
     spark: SparkSession,
     path: str,
@@ -81,16 +139,10 @@ def compact(
     scan cost is dominated by file-open overhead and the NameNode/listing
     pressure, so periodic compaction to ~128 MB files is part of the
     engine's storage contract (same reason maxPartitionBytes is 128 MB:
-    one task per file). Returns the new file count. Rewrite is staged +
-    atomic-renamed like every other publish."""
-    import math
-    import os
-
-    from fpl_data_pipeline_spark.pipeline import recover
-
-    # same crash-recovery preamble as every publish: a crash between
-    # compact's own two renames leaves the table at .bak only — restore it
-    # before reading, or the read fails and callers treat the table as absent
+    one task per file). Returns the new file count. The rewrite goes
+    through :func:`publish` like every other table write."""
+    # recover before sizing and reading: a crash inside an earlier
+    # publish can leave the table at .bak only
     recover(path)
     total = sum(
         os.path.getsize(os.path.join(dp, f))
@@ -99,12 +151,7 @@ def compact(
         if f.endswith(".parquet")
     )
     n_files = max(1, math.ceil(total / target_bytes_per_file))
-    df = spark.read.parquet(path)
-    stage, backup = path + ".stage", path + ".bak"
-    df.repartition(n_files).write.mode("overwrite").parquet(stage)
-    os.rename(path, backup)
-    os.rename(stage, path)
-    shutil.rmtree(backup)
+    publish(spark.read.parquet(path).repartition(n_files), path)
     return n_files
 
 

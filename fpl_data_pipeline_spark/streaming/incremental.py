@@ -22,6 +22,7 @@ import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
 from fpl_data_pipeline_spark.operators.upsert import upsert
+from fpl_data_pipeline_spark.sources.io import publish, read_or_none, recover
 
 EVENT_SCHEMA = T.StructType(
     [
@@ -59,40 +60,14 @@ def run_available_now(
     agg = windowed_counts(stream)
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        """Idempotent merge with an atomic publish.
-
-        The merged result is FULLY materialized into a staging dir before the
-        live table is touched, then published by directory rename (atomic on
-        a POSIX filesystem; on an object store substitute a manifest-pointer
-        swap or a table format with a transaction log).  A crash at any point
-        leaves either the old table or the new one — never a half-written
-        directory — so the checkpoint-driven replay always merges against a
-        consistent base.  Leftover staging/backup dirs from a crashed run are
-        recovered/cleaned first, keeping the exactly-once contract.
-        """
-        import os
-        import shutil
-
+        """Idempotent merge published through io.publish: a crash at any
+        point leaves either the old table or the new one, and read_or_none
+        restores a torn swap first, so the checkpoint-driven replay always
+        merges against a consistent base (exactly-once)."""
+        base = read_or_none(batch_df.sparkSession, target_path)
         keys = ["window_start", "event_type"]
-        stage = target_path + ".stage"
-        backup = target_path + ".bak"
-        # crash mid-swap: target renamed away but new version not yet in place
-        if not os.path.exists(target_path) and os.path.exists(backup):
-            os.rename(backup, target_path)
-        for leftover in (stage, backup):
-            if os.path.exists(leftover):
-                shutil.rmtree(leftover)
-        if os.path.exists(target_path):
-            base = batch_df.sparkSession.read.parquet(target_path)
-            merged = upsert(base, batch_df, keys)
-        else:
-            merged = batch_df
-        merged.write.mode("overwrite").parquet(stage)
-        if os.path.exists(target_path):
-            os.rename(target_path, backup)
-        os.rename(stage, target_path)
-        if os.path.exists(backup):
-            shutil.rmtree(backup)
+        merged = upsert(base, batch_df, keys) if base is not None else batch_df
+        publish(merged, target_path)
 
     q = (
         agg.writeStream.outputMode("update")
@@ -171,8 +146,9 @@ def run_week_feed_merge(
     """End-to-end: the custom streaming week-feed source
     (sources/python_datasource.py::WeekFeedStreamSource — week-number
     offsets over landed week_<n>.json pulls) drained into the engine's
-    idempotent keyed merge on (week, player_id), with the same
-    staged+atomic-rename publish as every other table. This is the
+    idempotent keyed merge on (week, player_id), committed through
+    ``io.publish`` like every other table; recovery of a torn publish runs
+    first, even for an empty micro-batch. This is the
     reference's get_id_data -> insert_week_data protocol as ONE streaming
     pipeline: offsets replace the high-water mark, the checkpoint replaces
     week_info bookkeeping, and the keyed merge keeps re-processing
@@ -186,30 +162,13 @@ def run_week_feed_merge(
     stream = spark.readStream.format("fpl_week_feed").option("path", feed_dir).load()
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-        import shutil
-
-        keys = ["week", "player_id"]
-        stage = target_path + ".stage"
-        backup = target_path + ".bak"
-        if not os.path.exists(target_path) and os.path.exists(backup):
-            os.rename(backup, target_path)
-        for leftover in (stage, backup):
-            if os.path.exists(leftover):
-                shutil.rmtree(leftover)
+        recover(target_path)  # an empty batch still heals a torn swap
         if batch_df.isEmpty():
             return
-        if os.path.exists(target_path):
-            base = batch_df.sparkSession.read.parquet(target_path)
-            merged = upsert(base, batch_df, keys)
-        else:
-            merged = batch_df
-        merged.write.mode("overwrite").parquet(stage)
-        if os.path.exists(target_path):
-            os.rename(target_path, backup)
-        os.rename(stage, target_path)
-        if os.path.exists(backup):
-            shutil.rmtree(backup)
+        base = read_or_none(batch_df.sparkSession, target_path)
+        keys = ["week", "player_id"]
+        merged = upsert(base, batch_df, keys) if base is not None else batch_df
+        publish(merged, target_path)
 
     q = (
         stream.writeStream.outputMode("append")

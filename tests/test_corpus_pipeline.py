@@ -10,7 +10,7 @@ import os
 import pyspark.sql.functions as F
 
 from fpl_data_pipeline_spark.operators.dedup import _norm_text
-from fpl_data_pipeline_spark.pipeline import _publish, recover
+from fpl_data_pipeline_spark.sources.io import publish, recover
 from fpl_data_pipeline_spark.tables import table
 
 SF = "/root/testdata/sf0.001"
@@ -24,7 +24,7 @@ def _run_corpus_pipeline(spark, root: str) -> dict[str, int]:
     # stage 1: length filter (scan-side predicate)
     toks = F.size(F.filter(F.split(_norm_text(F.col("text")), " "), lambda w: w != ""))
     kept = d.filter(toks >= MIN_TOKENS)
-    _publish(kept, os.path.join(root, "filtered"))
+    publish(kept, os.path.join(root, "filtered"))
     filtered = spark.read.parquet(os.path.join(root, "filtered"))
 
     # stage 2: exact dedup — keep min doc_id per normalized-text fingerprint
@@ -33,7 +33,7 @@ def _run_corpus_pipeline(spark, root: str) -> dict[str, int]:
     )
     keepers = fp.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
     deduped = filtered.join(keepers.select("doc_id"), "doc_id", "leftsemi")
-    _publish(deduped, os.path.join(root, "deduped"))
+    publish(deduped, os.path.join(root, "deduped"))
     deduped = spark.read.parquet(os.path.join(root, "deduped"))
 
     # stage 3: deterministic hash split
@@ -45,8 +45,8 @@ def _run_corpus_pipeline(spark, root: str) -> dict[str, int]:
     )
     train = deduped.filter(bucket < 90)
     test = deduped.filter(bucket >= 90)
-    _publish(train, os.path.join(root, "train"))
-    _publish(test, os.path.join(root, "test"))
+    publish(train, os.path.join(root, "train"))
+    publish(test, os.path.join(root, "test"))
 
     return {
         "n_in": n_in,

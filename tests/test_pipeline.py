@@ -148,7 +148,7 @@ def test_pipeline_rejects_empty_landing(spark, tmp_path):
 
 
 def test_pipeline_publish_crash_recovery(spark, landing, tmp_path):
-    """A crash between _publish's two renames (table at .bak, garbage at
+    """A crash between io.publish's two renames (table at .bak, garbage at
     .stage) must be recovered on the next run — same contract as the
     streaming merge, exercised through run_pipeline itself."""
     import os
@@ -169,7 +169,7 @@ def test_pipeline_publish_crash_recovery(spark, landing, tmp_path):
 
 
 def test_pipeline_crash_recovery_preserves_merged_history(spark, landing, tmp_path):
-    """The ADVICE-flagged ordering bug: after a crash between _publish's two
+    """The ADVICE-flagged ordering bug: after a crash between io.publish's two
     renames, the NEXT run must restore .bak BEFORE reading the merge base.
     The batch here is a PARTIAL snapshot (only week 2), so reading the base
     as absent would silently rebuild from the batch alone and drop the

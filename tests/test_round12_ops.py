@@ -159,6 +159,29 @@ def test_pair_packed_agg_matches_two_column(spark):
     assert a == b and len(a) > 0
 
 
+def test_pair_pack_int_ids_match_bigint(spark):
+    """An ``int`` doc_id must not take the packed (a << 31 | b) path:
+    shiftleft on a 32-bit operand wraps, merging distinct pairs. The
+    overlap stats over int-cast ids equal the bigint result."""
+    from fpl_data_pipeline_spark.operators.dedup import (
+        _pair_pack_ok,
+        _set_overlap_stats,
+        shingles,
+    )
+
+    base = "the quick brown fox jumps over the lazy dog near the river bank"
+    rows = [(i, " ".join(base.split()[i % 4:]) + f" tail{i % 3}") for i in range(1, 9)]
+    d = spark.createDataFrame(rows, "doc_id long, text string")
+    d32 = d.withColumn("doc_id", F.col("doc_id").cast("int"))
+    assert _pair_pack_ok(d32) is False
+    key = lambda r: (r["doc_id_a"], r["doc_id_b"], r["n_common"], r["na"], r["nb"])  # noqa: E731
+    wide = sorted(key(r) for r in _set_overlap_stats(shingles(d), "shingle", ids=d).collect())
+    narrow = sorted(
+        key(r) for r in _set_overlap_stats(shingles(d32), "shingle", ids=d32).collect()
+    )
+    assert narrow == wide and len(wide) > 0
+
+
 def test_audit_shared_words_matches_per_family_tokenize(spark):
     """candidate_cap_audit's shared doc_words pin yields the same rows as
     helpers tokenizing independently (the audit's code-sharing contract:
@@ -172,10 +195,7 @@ def test_audit_shared_words_matches_per_family_tokenize(spark):
     d = table(spark, "/root/testdata/sf0.001", "documents")
     words = doc_words(d).localCheckpoint(eager=False)
     for fn, cols in ((shingles, ("doc_id", "shingle")), (winnow_doc_fingerprints, ("doc_id", "fp"))):
-        if fn is shingles:
-            shared, solo = fn(d, words=words), fn(d)
-        else:
-            shared, solo = fn(d, words=words), fn(d)
+        shared, solo = fn(d, words=words), fn(d)
         a = sorted(tuple(r[c] for c in cols) for r in shared.collect())
         b = sorted(tuple(r[c] for c in cols) for r in solo.collect())
         assert a == b and len(a) > 0

@@ -1,4 +1,4 @@
-"""Round-11 optimization measurement harness.
+"""Round-12 optimization measurement harness.
 
 Times named queries (default: the bench HEADLINE set) in isolation with the
 noop sink (guide §1.4 — computes every column, no optimizer count-pruning,
